@@ -427,7 +427,7 @@ def main() -> None:
     # spurious sub-second "regressions" on untouched code (the r15
     # scoreboard). Both raw passes are preserved in the detail record.
     two_pass: dict | None = None
-    if only is None and not os.environ.get("SPARK_GRAFT_SINGLE_PASS"):
+    if only is None and not env_flag("SPARK_GRAFT_SINGLE_PASS"):
         t2, s2, b2 = _run_suite(spark, headline, sf_dir)
         two_pass = {
             "pass1_queries": dict(timings),
@@ -550,7 +550,7 @@ def main() -> None:
     # comparison target is the sf0.1 timing of the SAME query, so the
     # interesting number is the ratio, not the absolute)
     sf1 = None if only else _sf1_dir()
-    if sf1 is not None and not os.environ.get("SPARK_GRAFT_SKIP_SF1"):
+    if sf1 is not None and not env_flag("SPARK_GRAFT_SKIP_SF1"):
         sf1_timings: dict[str, float] = {}
         for key in SF1_QUERIES:
             # best-of-2, not single-shot: this loop runs at the END of a
@@ -644,6 +644,13 @@ def main() -> None:
             k: v["isolated"] for k, v in isolated.items()
         }
     print(compact_stdout_line(compact))
+
+
+def env_flag(name: str) -> bool:
+    """A boolean environment switch: unset, empty, ``0``, ``false``,
+    ``no`` and ``off`` (any case) are false; any other value is true."""
+    value = os.environ.get(name, "").strip().lower()
+    return value not in ("", "0", "false", "no", "off")
 
 
 def merge_min_of_two(

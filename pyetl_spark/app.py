@@ -30,7 +30,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -112,29 +112,34 @@ def _apply(df: DataFrame, spec: PipelineSpec) -> DataFrame:
     return df
 
 
-def _write_batch_sinks(df: DataFrame, spec: PipelineSpec) -> None:
+def _write_batch_sinks(df: DataFrame, spec: PipelineSpec) -> int:
+    """Write ``df`` once per sink from one cached computation; returns its
+    row count, observed during the first write (no extra pass)."""
+    if not spec.sinks:  # an Observation fills only when an action runs
+        return df.count()
     cached = df.cache()
+    obs = Observation("landed")
+    counted = cached.observe(obs, F.count(F.lit(1)).alias("rows"))
     try:
         for sink in spec.sinks:
             if isinstance(sink, ParquetSink):
-                w = cached.write.mode(sink.mode)
+                w = counted.write.mode(sink.mode)
                 if sink.partition_by:
                     w = w.partitionBy(sink.partition_by)
                 w.parquet(sink.path)
             elif isinstance(sink, JsonSink):
-                cached.write.mode(sink.mode).json(sink.path)
+                counted.write.mode(sink.mode).json(sink.path)
             else:  # pragma: no cover
                 raise TypeError(f"unknown sink: {sink!r}")
     finally:
         cached.unpersist()
+    return obs.get["rows"]
 
 
 def run_batch(spark: SparkSession, spec: PipelineSpec) -> int:
     """One-shot run: read → transforms → every sink. Returns rows landed."""
     df = spark.read.schema(spec.source.schema).json(spec.source.path)
-    out = _apply(df, spec)
-    _write_batch_sinks(out, spec)
-    return out.count()
+    return _write_batch_sinks(_apply(df, spec), spec)
 
 
 def run_streaming(

@@ -26,7 +26,7 @@ from pyetl_spark.operators.minhash import (
 )
 from pyetl_spark.operators.simhash import simhash_near_dup_pairs
 from pyetl_spark.registry import query
-from pyetl_spark.tables import load_tables
+from pyetl_spark.tables import load_tables, read_parquet
 
 
 def _ns_text(doc_id_col: str = "doc_id", text_col: str = "text"):
@@ -2399,9 +2399,9 @@ def ivfpq_bench_search(base: str):
     from pyetl_spark.operators.ivfpq import ivfpq_topk
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        cents_idx = spark.read.parquet(os.path.join(base, "centroids"))
-        cb_idx = spark.read.parquet(os.path.join(base, "codebook"))
-        codes_idx = spark.read.parquet(os.path.join(base, "codes"))
+        cents_idx = read_parquet(spark, os.path.join(base, "centroids"))
+        cb_idx = read_parquet(spark, os.path.join(base, "codebook"))
+        codes_idx = read_parquet(spark, os.path.join(base, "codes"))
         e = load_tables(spark, sf_dir).embeddings
         probes = (
             e.select(

@@ -236,9 +236,10 @@ def events_rollup_multi_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(fxp(F.col("value"), 100)).alias("cents"),
         )
     )
-    # localCheckpoint would be overkill at fixture scale; at 100 TB the
-    # hourly frame is the natural persist()/materialization point.
-    hourly = hourly.persist()
+    # No persist: the three grains read one hourly aggregate, and Spark
+    # reuses its shuffle stage for the day and week grains, so the events
+    # scan runs once per call. A persist would outlive the call, since
+    # nothing here can unpersist a frame the caller has yet to run.
     descale = lambda c: rnd(c.cast("double") / F.lit(100.0), 2)  # noqa: E731
     hour_out = hourly.select(
         F.lit("hour").alias("grain"),

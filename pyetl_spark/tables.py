@@ -12,12 +12,19 @@ are unaffected by the fixture's storage type.
 At 100 TB the loader is where partition discovery, ANALYZE stats, and bucketed
 table registration would live; for the fixtures it stays a thin wrapper so
 every query compiles to a plain vectorized parquet scan with pushdown intact.
+
+Every read goes through ``read_parquet``, which infers a file's schema once
+per file version: inference reads Parquet footers in a Spark job, and the
+query path reads the same tables on every call.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pyetl_spark.session import tune
 
@@ -35,9 +42,46 @@ TABLE_NAMES = (
 )
 
 
+#: Session confs that decide which of the two ``events.ts`` branches in
+#: ``load_table`` an inferred schema takes, so they are part of its version.
+_TS_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: path -> ((st_mtime_ns, *conf values), inferred schema). Shared by every
+#: session in the process: a new file version or conf value replaces the
+#: path's entry, and two readers racing on one path cost one extra
+#: inference, never a wrong schema.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version.
+
+    The first read of a path infers its schema, which fires a Spark job
+    that reads the footers. Later reads of the same version pass that
+    schema, so building the plan fires no job. The version is the path's
+    ``st_mtime_ns`` and the session's timestamp-inference confs. A path
+    that cannot be ``stat``-ed (a remote scheme) is inferred on every read.
+    """
+    try:
+        mtime = os.stat(path).st_mtime_ns
+    except OSError:
+        return spark.read.parquet(path)
+    version = (mtime, *(spark.conf.get(c) for c in _TS_INFERENCE_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == version:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (version, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table, normalizing schema quirks."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -56,8 +100,9 @@ class Tables:
     """Lazy named access to the fixture tables of one scale-factor dir.
 
     ``t.lineitem`` etc. return DataFrames; each access builds a fresh scan
-    (cheap — plan node only, no data moves) so callers can't accidentally
-    share cached plans across queries.
+    so callers can't accidentally share cached plans across queries. The
+    first access to a table infers its schema in a Spark job; later
+    accesses reuse that schema (``read_parquet``) and fire no job.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str):

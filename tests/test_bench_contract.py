@@ -85,3 +85,15 @@ def test_merge_min_of_two_keeps_pass1_keys_missing_from_pass2():
     # the second pass lacks keeps its pass-1 value
     merged = bench.merge_min_of_two({"a": 1.234}, {})
     assert merged == {"a": 1.234}
+
+
+def test_env_flag_reads_zero_and_false_as_off(monkeypatch):
+    name = "SPARK_GRAFT_SINGLE_PASS"
+    monkeypatch.delenv(name, raising=False)
+    assert not bench.env_flag(name)
+    for off in ("", "0", "false", "FALSE", "no", "off", " 0 "):
+        monkeypatch.setenv(name, off)
+        assert not bench.env_flag(name), off
+    for on in ("1", "true", "yes", "on"):
+        monkeypatch.setenv(name, on)
+        assert bench.env_flag(name), on
