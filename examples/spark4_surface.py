@@ -77,10 +77,10 @@ def main() -> None:
     from pyetl_spark.operators.pydatasource import (
         CounterStreamSource,
         SyntheticEventsSource,
-        ship_by_value,
     )
+    from pyetl_spark.session import ship_by_value
 
-    ship_by_value()
+    ship_by_value(SyntheticEventsSource.__module__)
     spark.dataSource.register(SyntheticEventsSource)
     spark.dataSource.register(CounterStreamSource)
     batch = (

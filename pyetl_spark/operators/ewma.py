@@ -29,14 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ship_module_by_value() -> None:
-    """Ship this module inside task closures (see multimodal.py)."""
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.ewma as _self
-
-    cloudpickle.register_pickle_by_value(_self)
+from pyetl_spark.session import ship_by_value
 
 
 def ewma(
@@ -51,7 +44,7 @@ def ewma(
     """DataFrame(key, ts, tiebreak?, value, ewma) — per-key EWMA in
     event-time order. ``adjust=False`` pandas semantics: the plain
     recurrence with y_0 = x_0."""
-    _ship_module_by_value()
+    ship_by_value(__name__)
     order = [ts_col] + ([tiebreak] if tiebreak else [])
     cols = [key, *order, value_col]
 
@@ -120,7 +113,7 @@ def ewma_chunked(
     rows(key)/n_slices fits a task — the knob trades sequential passes
     for memory. The streaming twin carries the same state per
     micro-batch via applyInPandasWithState."""
-    _ship_module_by_value()
+    ship_by_value(__name__)
     order = [ts_col] + ([tiebreak] if tiebreak else [])
     cols = [key, *order, value_col]
     a = float(alpha)

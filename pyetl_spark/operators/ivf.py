@@ -22,30 +22,18 @@ expectation instead of the full corpus.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _sq_dist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from pyetl_spark.parity import cosine, sq_dist
 
 
-def _norm_sq(col):
-    return F.aggregate(
-        F.transform(col, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-    )
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda a2, x: a2 + x
-    )
+#: Spark's string spellings of the doubles that have no SQL literal.
+_NON_FINITE = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
 
 
 def localize_rows(spark, rows, schema) -> DataFrame:
@@ -59,8 +47,9 @@ def localize_rows(spark, rows, schema) -> DataFrame:
     collect over it is ``executeCollect`` with NO job, and a broadcast
     builds straight from the local rows. Values are bit-identical:
     doubles round-trip through Python ``repr`` (shortest form) and
-    Spark's correctly-rounded literal parser; the final SELECT casts
-    every column back to ``schema``.
+    Spark's correctly-rounded literal parser; NaN and ±inf, which have
+    no literal form, become ``CAST('NaN' AS DOUBLE)``-style constants;
+    the final SELECT casts every column back to ``schema``.
 
     Supports the types index state uses (int/long, double, arrays of
     them, None); raises on anything else rather than silently coercing.
@@ -80,7 +69,9 @@ def localize_rows(spark, rows, schema) -> DataFrame:
         if isinstance(v, int):
             return f"{v}L"
         if isinstance(v, float):
-            return repr(v) + "D"
+            if math.isfinite(v):
+                return repr(v) + "D"
+            return f"CAST('{_NON_FINITE[repr(v)]}' AS DOUBLE)"
         if isinstance(v, (list, tuple)):
             return "array(" + ", ".join(lit(x) for x in v) + ")"
         raise TypeError(f"localize_rows: unsupported cell {type(v)}")
@@ -161,7 +152,7 @@ def _nearest_cell_rows(vec_df: DataFrame, rows, vec_col: str):
                 cents_lit,
                 cells_lit,
                 lambda cv, cid: F.struct(
-                    _sq_dist(F.col(vec_col), cv).alias("dist"),
+                    sq_dist(F.col(vec_col), cv).alias("dist"),
                     cid.alias("cell"),
                 ),
             )
@@ -283,7 +274,7 @@ def seed_centroids_farthest(
     chosen = [list(first)]
     for _ in range(k - 1):
         dists = [
-            _sq_dist(
+            sq_dist(
                 F.col(vec_col), F.array(*[F.lit(float(x)) for x in c])
             )
             for c in chosen
@@ -401,7 +392,7 @@ def ivf_topk(
     `indexed_corpus` = ivf_assign output with (cand_id, cand_vec, cell).
     """
     pc = probes.crossJoin(F.broadcast(centroids)).withColumn(
-        "_d", _sq_dist(F.col(probe_vec), F.col("centroid"))
+        "_d", sq_dist(F.col(probe_vec), F.col("centroid"))
     )
     w = Window.partitionBy(probe_id).orderBy(F.col("_d"), F.col("cell"))
     probe_cells = (
@@ -412,11 +403,7 @@ def ivf_topk(
     cands = probe_cells.join(indexed_corpus, "cell").filter(
         F.col(cand_id) != F.col(probe_id)
     )
-    sim = (
-        _dot(F.col(probe_vec), F.col(cand_vec))
-        / F.sqrt(_norm_sq(F.col(probe_vec)))
-        / F.sqrt(_norm_sq(F.col(cand_vec)))
-    )
+    sim = cosine(F.col(probe_vec), F.col(cand_vec))
     w2 = Window.partitionBy(probe_id).orderBy(
         F.col("sim").desc(), F.col(cand_id)
     )

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyetl_spark.operators.pq import _sq_dist
+from pyetl_spark.parity import ordered_sum, sq_dist
 
 #: build-parameter stamp carried in the codes frame's ``code`` field
 #: metadata (parquet round-trips Spark schema metadata — the same
@@ -169,7 +169,7 @@ def ivfpq_topk(
     )
     cents = F.broadcast(coarse_centroids)
     pc = probes.crossJoin(cents).withColumn(
-        "_d", _sq_dist(F.col(probe_vec), F.col("centroid"))
+        "_d", sq_dist(F.col(probe_vec), F.col("centroid"))
     )
     w = Window.partitionBy(probe_id).orderBy(F.col("_d"), F.col("cell"))
     probe_cells = (
@@ -192,7 +192,7 @@ def ivfpq_topk(
         "cell",
         "sub",
         "code",
-        _sq_dist(F.col("v"), F.col("centroid")).alias("pd"),
+        sq_dist(F.col("v"), F.col("centroid")).alias("pd"),
     )
     joined = codes.join(table, ["cell", "sub", "code"])
     if exclude_self:
@@ -200,14 +200,7 @@ def ivfpq_topk(
     scored = (
         joined.groupBy("pid", "id")
         .agg(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub", "pd"))),
-                    lambda st: st.getField("pd"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("adc_dist")
+            ordered_sum("pd", "sub").alias("adc_dist")
         )
     )
     w2 = Window.partitionBy("pid").orderBy("adc_dist", "id")

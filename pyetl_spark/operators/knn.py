@@ -26,8 +26,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyetl_spark.parity import cosine
 
-def _scramble(x: int) -> int:
+
+def scramble(x: int) -> int:
+    """splitmix64 finalizer: a pure 64-bit integer mix, shared by the SRP
+    planes here and the minhash hash-family parameters."""
     x = (x ^ (x >> 30)) * 0xBF58476D1CE4E5B9 % (1 << 64)
     x = (x ^ (x >> 27)) * 0x94D049BB133111EB % (1 << 64)
     return x ^ (x >> 31)
@@ -38,7 +42,7 @@ def _planes(n_bits: int, dim: int, seed: int) -> list[list[float]]:
     SRP and keep the fold integer-friendly)."""
     return [
         [
-            1.0 if _scramble(seed * 1_000_003 + j * dim + d) & 1 else -1.0
+            1.0 if scramble(seed * 1_000_003 + j * dim + d) & 1 else -1.0
             for d in range(dim)
         ]
         for j in range(n_bits)
@@ -69,18 +73,6 @@ def _dot_sql(vec_sql: str, plane: list[float]) -> str:
     return (
         f"aggregate(zip_with({quoted}, array({arr}), (x, p) -> x * p), "
         "0.0D, (a, x) -> a + x)"
-    )
-
-
-def _norm_sq(col: Column) -> Column:
-    return F.aggregate(
-        F.transform(col, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-    )
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda a2, x: a2 + x
     )
 
 
@@ -129,11 +121,7 @@ def cosine_topk_bruteforce(
     pairs = F.broadcast(probes).crossJoin(corpus).filter(
         F.col(cand_id) != F.col(probe_id)
     )
-    sim = (
-        _dot(F.col(probe_vec), F.col(cand_vec))
-        / F.sqrt(_norm_sq(F.col(probe_vec)))
-        / F.sqrt(_norm_sq(F.col(cand_vec)))
-    )
+    sim = cosine(F.col(probe_vec), F.col(cand_vec))
     w = Window.partitionBy(probe_id).orderBy(
         F.col("sim").desc(), F.col(cand_id)
     )
@@ -190,11 +178,7 @@ def cosine_topk_lsh(
         .select(probe_id, probe_vec, cand_id, cand_vec)
         .distinct()
     )
-    sim = (
-        _dot(F.col(probe_vec), F.col(cand_vec))
-        / F.sqrt(_norm_sq(F.col(probe_vec)))
-        / F.sqrt(_norm_sq(F.col(cand_vec)))
-    )
+    sim = cosine(F.col(probe_vec), F.col(cand_vec))
     w = Window.partitionBy(probe_id).orderBy(
         F.col("sim").desc(), F.col(cand_id)
     )
@@ -276,11 +260,7 @@ def embedding_dedup_assign(
     )
     a = v.select(F.col("_vid").alias("id_a"), F.col("_v").alias("_va"))
     b = v.select(F.col("_vid").alias("id_b"), F.col("_v").alias("_vb"))
-    sim = (
-        _dot(F.col("_va"), F.col("_vb"))
-        / F.sqrt(_norm_sq(F.col("_va")))
-        / F.sqrt(_norm_sq(F.col("_vb")))
-    )
+    sim = cosine(F.col("_va"), F.col("_vb"))
     verified = (
         edges.join(a, "id_a")
         .join(b, "id_b")

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyetl_spark.operators.knn import scramble
+
 # 2^31-1: keeps (h % p) * a inside int64 (product < 2^62) — a 61-bit
 # prime would overflow JVM long multiplication
 _MERSENNE_P = (1 << 31) - 1
@@ -34,12 +36,6 @@ _MERSENNE_P = (1 << 31) - 1
 def _hash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for the universal hash family, derived
     from a splitmix-style integer scramble of the seed (no RNG state)."""
-
-    def scramble(x: int) -> int:
-        x = (x ^ (x >> 30)) * 0xBF58476D1CE4E5B9 % (1 << 64)
-        x = (x ^ (x >> 27)) * 0x94D049BB133111EB % (1 << 64)
-        return x ^ (x >> 31)
-
     params = []
     for i in range(num_hashes):
         a = scramble(seed * 2654435761 + 2 * i) % (_MERSENNE_P - 1) + 1

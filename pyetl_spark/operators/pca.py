@@ -28,21 +28,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyetl_spark.parity import dot
+from pyetl_spark.session import ship_by_value
+
 #: exact-path parameters — single source shared with the DuckDB oracle
 #: generator (queries/llm_vec._pca_oracle) so a call-site change cannot
 #: desynchronize engine and oracle.
 PCA_SCALE = 1e4
 PCA_ITERS = 60
-
-
-def _ship_module_by_value() -> None:
-    """Ship this module inside task closures (see multimodal.py) so the
-    mapInPandas closure works when the repo isn't on executor paths."""
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.pca as _self
-
-    cloudpickle.register_pickle_by_value(_self)
 
 
 def _moments(vec_col: str, dim: int):
@@ -80,7 +73,7 @@ def top_component(
     starts from a fixed seed and the sign is canonicalized so the
     largest-|coordinate| entry is positive.
     """
-    _ship_module_by_value()
+    ship_by_value(__name__)
     if dim is None:
         dim = len(
             df.select(vec_col).filter(F.size(vec_col) > 0).first()[0]
@@ -137,12 +130,7 @@ def project(
     centered = F.zip_with(
         F.col(vec_col).cast("array<double>"), mean_lit, lambda x, m: x - m
     )
-    dot = F.aggregate(
-        F.zip_with(centered, comp_lit, lambda x, c: x * c),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return df.withColumn(out_col, dot)
+    return df.withColumn(out_col, dot(centered, comp_lit))
 
 
 def _moments_quantized(vec_col: str, dim: int, scale: float):
@@ -204,7 +192,7 @@ def top_component_exact(
     identical bits. Integer-overflow headroom: |q| <= scale·max|x|, so
     Σq_iq_j fits int64 up to ~2^63/(scale·max|x|)^2 rows — at true
     100 TB scale escalate the moment sums to DECIMAL(38,0)."""
-    _ship_module_by_value()
+    ship_by_value(__name__)
     schema = "sum_outer array<long>, sum_vec array<long>, n bigint"
     parts = df.select(vec_col).mapInPandas(
         _moments_quantized(vec_col, dim, scale), schema=schema

@@ -30,14 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyetl_spark.operators.ivf import localize_bounded
-
-
-def _sq_dist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from pyetl_spark.parity import ordered_sum, sq_dist
 
 
 def split_subvectors(
@@ -69,7 +62,7 @@ def split_subvectors(
 def _assign(sub_df: DataFrame, codebook: DataFrame) -> DataFrame:
     """(id, sub, v, code, dist): nearest codeword per subvector."""
     paired = sub_df.join(F.broadcast(codebook), "sub")
-    d = _sq_dist(F.col("v"), F.col("centroid"))
+    d = sq_dist(F.col("v"), F.col("centroid"))
     best = F.min(F.struct(d.alias("d"), F.col("cell").alias("c")))
     return (
         paired.groupBy("id", "sub")
@@ -184,7 +177,7 @@ def adc_topk(
             "pid",
             "sub",
             F.col("cell").alias("code"),
-            _sq_dist(F.col("v"), F.col("centroid")).alias("pd"),
+            sq_dist(F.col("v"), F.col("centroid")).alias("pd"),
         )
     )
     # ADC distance = SUM of the m per-subspace table entries — folded in
@@ -198,14 +191,7 @@ def adc_topk(
     scored = (
         joined.groupBy("pid", "id")
         .agg(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub", "pd"))),
-                    lambda st: st.getField("pd"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("adc_dist")
+            ordered_sum("pd", "sub").alias("adc_dist")
         )
     )
     w = Window.partitionBy("pid").orderBy("adc_dist", "id")

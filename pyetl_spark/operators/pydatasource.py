@@ -37,20 +37,6 @@ from pyspark.sql.datasource import (
 _MIX = 2654435761
 
 
-def ship_by_value() -> None:
-    """Register this module for by-value cloudpickle so the DataSource
-    class deserializes on Python workers WITHOUT the repo on their
-    PYTHONPATH (same posture as operators/multimodal.py: self-contained
-    task closures unless the package is installed cluster-wide). Must be
-    pyspark's VENDORED cloudpickle — the workers deserialize with
-    pyspark.serializers, which ignores the standalone package's registry."""
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.pydatasource as _self
-
-    cloudpickle.register_pickle_by_value(_self)
-
-
 class SyntheticEventsReader(DataSourceReader):
     """Deterministic generator: ids [0, rows) split evenly over `parts`."""
 

@@ -23,16 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ship_module_by_value() -> None:
-    """applyInPandas closures reference this module's helpers; ship the
-    module by value so executors don't need the repo on PYTHONPATH (must
-    be pyspark's vendored cloudpickle — see operators/multimodal.py)."""
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.semdedup as _self
-
-    cloudpickle.register_pickle_by_value(_self)
+from pyetl_spark.session import ship_by_value
 
 
 _OUT_SCHEMA = (
@@ -89,7 +80,7 @@ def semdedup_assign(
     """
     from pyetl_spark.operators.ivf import ivf_assign, kmeans_fit
 
-    _ship_module_by_value()
+    ship_by_value(__name__)
     v = vectors.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("e")
     )
@@ -156,7 +147,7 @@ def semdedup_assign_exact(
     Same k×O((n/k)²) scale contract as the default form."""
     from pyetl_spark.operators.ivf import ivf_assign, kmeans_fit_exact
 
-    _ship_module_by_value()
+    ship_by_value(__name__)
     v = vectors.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("e")
     )

@@ -19,6 +19,14 @@ outputs are bit-identical whenever inputs are bit-identical:
 
 Both engines then compute floor on the same bits and divide the same integer
 by the same power of ten → identical doubles out.
+
+Vector reductions follow one rule: a zero-seeded, ascending left fold
+(Spark ``aggregate`` with a 0.0 seed; DuckDB ``list_reduce`` over a
+``list_prepend``-ed double zero). The same adds in the same order give the
+same bits on both engines, so the fold kernels below — ``dot``,
+``norm_sq``, ``sq_dist``, ``cosine`` and ``ordered_sum`` — are the only
+place that rule is written down. They never cast: a caller folding float32
+values casts the list to double first, or DuckDB multiplies in FLOAT.
 """
 
 from __future__ import annotations
@@ -131,3 +139,77 @@ def PHASH60_SEEDED(seed: str, expr: str) -> str:
     """DuckDB SQL twin of ``phash60_seeded``."""
     inner = f"CAST({seed} AS VARCHAR) || '|' || CAST({expr} AS VARCHAR)"
     return f"CAST('0x' || substring(md5({inner}), 1, 15) AS BIGINT)"
+
+
+def _fold(arr: Column) -> Column:
+    """Zero-seeded ascending left fold of a double array."""
+    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _FOLD(list_sql: str) -> str:
+    """DuckDB SQL twin of ``_fold``."""
+    return (
+        f"list_reduce(list_prepend(CAST(0 AS DOUBLE), {list_sql}),"
+        " (fa, fx) -> fa + fx)"
+    )
+
+
+def dot(a: Column, b: Column) -> Column:
+    """Dot product: the fold of a_i·b_i."""
+    return _fold(F.zip_with(a, b, lambda x, y: x * y))
+
+
+def DOT(a: str, b: str) -> str:
+    """DuckDB SQL twin of ``dot``."""
+    return _FOLD(
+        f"list_transform(generate_series(1, len({a})),"
+        f" fi -> ({a})[fi] * ({b})[fi])"
+    )
+
+
+def norm_sq(a: Column) -> Column:
+    """Squared L2 norm: the fold of a_i²."""
+    return _fold(F.transform(a, lambda x: x * x))
+
+
+def NORM_SQ(a: str) -> str:
+    """DuckDB SQL twin of ``norm_sq``."""
+    return _FOLD(f"list_transform({a}, fx -> fx * fx)")
+
+
+def sq_dist(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance: the fold of (a_i − b_i)²."""
+    return _fold(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
+
+
+def SQ_DIST(a: str, b: str) -> str:
+    """DuckDB SQL twin of ``sq_dist``."""
+    d = f"(({a})[fi] - ({b})[fi])"
+    return _FOLD(
+        f"list_transform(generate_series(1, len({a})), fi -> {d} * {d})"
+    )
+
+
+def cosine(a: Column, b: Column) -> Column:
+    """Cosine similarity as dot(a,b) / sqrt(norm_sq(a)) / sqrt(norm_sq(b))
+    — this op order, not dot / (|a|·|b|), is the one both engines run."""
+    return dot(a, b) / F.sqrt(norm_sq(a)) / F.sqrt(norm_sq(b))
+
+
+def COSINE(a: str, b: str) -> str:
+    """DuckDB SQL twin of ``cosine``."""
+    return f"({DOT(a, b)} / sqrt({NORM_SQ(a)}) / sqrt({NORM_SQ(b)}))"
+
+
+def ordered_sum(value: str, *order: str) -> Column:
+    """Aggregate: the group's ``value`` column folded in ascending
+    ``order`` — a float sum whose bits do not depend on partitioning
+    (``F.sum`` adds in whatever order partial aggregates arrive).
+    ``order`` must be unique within a group."""
+    rows = F.array_sort(F.collect_list(F.struct(*order, value)))
+    return _fold(F.transform(rows, lambda s: s.getField(value)))
+
+
+def ORDERED_SUM(value: str, *order: str) -> str:
+    """DuckDB SQL twin of ``ordered_sum``."""
+    return _FOLD(f"list({value} ORDER BY {', '.join(order)})")

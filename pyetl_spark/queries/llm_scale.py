@@ -19,7 +19,20 @@ from pyspark.sql import functions as F
 
 from pyetl_spark.operators import text as TX
 from pyetl_spark.operators.knn import cosine_topk_lsh
-from pyetl_spark.parity import FXP, PHASH60, PHASH60_SEEDED, R, rnd
+from pyetl_spark.parity import (
+    COSINE,
+    DOT,
+    FXP,
+    NORM_SQ,
+    ORDERED_SUM,
+    PHASH60,
+    PHASH60_SEEDED,
+    R,
+    SQ_DIST,
+    cosine,
+    rnd,
+    sq_dist,
+)
 from pyetl_spark.operators.minhash import (
     minhash_dedup_assign,
     minhash_near_dup_pairs,
@@ -286,17 +299,6 @@ def _srp_planes_values() -> str:
     )
 
 
-_FOLD_DOT = (
-    "list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-    "list_transform(generate_series(1, 64), i -> {a}[i] * {b}[i])), "
-    "(acc, x) -> acc + x)"
-)
-_FOLD_NORM = (
-    "sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-    "list_transform({a}, x -> x * x)), (acc, x) -> acc + x))"
-)
-
-
 @query(
     "vec_ann_lsh",
     oracle=f"""
@@ -312,7 +314,7 @@ _FOLD_NORM = (
                            ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS sig
       FROM (
         SELECT v.vec_id, pl.j,
-               {_FOLD_DOT.format(a="v.e", b="pl.p")} AS dot
+               {DOT("v.e", "pl.p")} AS dot
         FROM v CROSS JOIN planes pl
       ) d
       GROUP BY d.vec_id
@@ -333,9 +335,7 @@ _FOLD_NORM = (
     ),
     sims AS (
       SELECT c.probe_id, c.cand_id,
-             {_FOLD_DOT.format(a="p.e", b="q.e")}
-               / {_FOLD_NORM.format(a="p.e")}
-               / {_FOLD_NORM.format(a="q.e")} AS sim
+             {COSINE("p.e", "q.e")} AS sim
       FROM cand c
       JOIN v p ON p.vec_id = c.probe_id
       JOIN v q ON q.vec_id = c.cand_id
@@ -457,32 +457,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("media_id")
 
 
-def _sq_sql(a: str, c: str, dim: int = 64) -> str:
-    """DuckDB twin of ivf._sq_dist: ascending fold of (a_i − c_i)²."""
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform(generate_series(1,{dim}), "
-        f"i -> ({a}[i] - {c}[i]) * ({a}[i] - {c}[i]))), (x,y) -> x + y)"
-    )
-
-
-def _dot_sql(a: str, b: str, dim: int = 64) -> str:
-    """DuckDB twin of ivf._dot: ascending fold of a_i·b_i."""
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform(generate_series(1,{dim}), "
-        f"i -> {a}[i] * {b}[i])), (x,y) -> x + y)"
-    )
-
-
-def _normsq_sql(a: str) -> str:
-    """DuckDB twin of ivf._norm_sq."""
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform({a}, x -> x * x)), (x,y) -> x + y)"
-    )
-
-
 def _kmeans_ctes(
     k: int | str = 8,
     iters: int = 2,
@@ -512,7 +486,7 @@ def _kmeans_ctes(
 
     def assign(s: str) -> str:
         dists = (
-            f"list_transform({s}.cents, c -> {_sq_sql('p.e', 'c', dim)})"
+            f"list_transform({s}.cents, c -> {SQ_DIST('p.e', 'c')})"
         )
         return (
             f"{s}.cells[list_position({dists}, "
@@ -579,7 +553,7 @@ def _ivf_oracle(k: int = 8, iters: int = 2, dim: int = 64) -> str:
     """Full DuckDB replay of vec_ann_ivf: exact k-means cells, nprobe=2
     cell search ranked by (dist, cell), fold-ordered cosine re-rank
     top-5 by (sim DESC, cand_id)."""
-    dists = f"list_transform(s.cents, c -> {_sq_sql('p.e', 'c', dim)})"
+    dists = f"list_transform(s.cents, c -> {SQ_DIST('p.e', 'c')})"
     final = f"c{iters}"
     return f"""
     WITH {_kmeans_ctes(k, iters, dim)},
@@ -604,9 +578,7 @@ def _ivf_oracle(k: int = 8, iters: int = 2, dim: int = 64) -> str:
     ),
     sims AS (
       SELECT DISTINCT pc.probe_id, i.cand_id,
-             {_dot_sql('pc.probe_vec', 'i.cand_vec', dim)}
-               / sqrt({_normsq_sql('pc.probe_vec')})
-               / sqrt({_normsq_sql('i.cand_vec')}) AS sim
+             {COSINE('pc.probe_vec', 'i.cand_vec')} AS sim
       FROM pcells pc JOIN idx i USING (cell)
       WHERE i.cand_id != pc.probe_id
     )
@@ -796,7 +768,7 @@ def _pq_oracle(
         SELECT s.id, s.sub, s.sv, c.cell,
                row_number() OVER (
                  PARTITION BY s.id, s.sub
-                 ORDER BY {_sq_sql('s.sv', 'c.centroid', d_sub)}, c.cell
+                 ORDER BY {SQ_DIST('s.sv', 'c.centroid')}, c.cell
                ) AS rn
         FROM subs s JOIN {cb} c USING (sub)
       ) WHERE rn = 1
@@ -848,14 +820,13 @@ def _pq_oracle(
     parts.append(
         f"""ptab AS MATERIALIZED (
       SELECT p.id AS pid, p.sub, c.cell AS code,
-             {_sq_sql('p.sv', 'c.centroid', d_sub)} AS pd
+             {SQ_DIST('p.sv', 'c.centroid')} AS pd
       FROM subs p JOIN cb{iters} c USING (sub)
       WHERE p.id < 5
     ),
     scored AS (
       SELECT t.pid, e2.id,
-             list_reduce(list_prepend(CAST(0 AS DOUBLE),
-               list(t.pd ORDER BY t.sub)), (a,b) -> a + b) AS adc_dist
+             {ORDERED_SUM("t.pd", "t.sub")} AS adc_dist
       FROM enc e2 JOIN ptab t ON t.sub = e2.sub AND t.code = e2.code
       GROUP BY t.pid, e2.id
     )"""
@@ -944,14 +915,14 @@ def _ivfpq_oracle(
     ``recall`` (r13, vec_ann_ivfpq_recall_eval): instead of the ranked
     neighbor rows, emit per-probe recall@topk of the IVF-PQ search
     against exact brute-force squared-L2 ground truth (same
-    fold-ordered _sq_sql on both sides, self excluded, (dist, id)
+    fold-ordered sq_dist/SQ_DIST on both sides, self excluded, (dist, id)
     tie-break) — the evaluation itself is hash-verified."""
     from pyetl_spark.operators.pq import PQ_SCALE
 
     scale = PQ_SCALE if scale is None else scale
     d_sub = dim // m
     final = f"c{coarse_iters}"
-    dists = f"list_transform(s.cents, c -> {_sq_sql('p.e', 'c', dim)})"
+    dists = f"list_transform(s.cents, c -> {SQ_DIST('p.e', 'c')})"
     argmin = f"list_position({dists}, list_aggregate({dists}, 'min'))"
     seed_h = PHASH60_SEEDED("sub", "id")
 
@@ -961,7 +932,7 @@ def _ivfpq_oracle(
         SELECT s.id, s.sub, s.sv, c.cell,
                row_number() OVER (
                  PARTITION BY s.id, s.sub
-                 ORDER BY {_sq_sql('s.sv', 'c.centroid', d_sub)}, c.cell
+                 ORDER BY {SQ_DIST('s.sv', 'c.centroid')}, c.cell
                ) AS rn
         FROM {src} s JOIN {cb} c USING (sub)
       ) WHERE rn = 1
@@ -1080,7 +1051,7 @@ def _ivfpq_oracle(
     ),
     ptab AS MATERIALIZED (
       SELECT pc.pid, pc.cell, s.sub, c.cell AS code,
-             {_sq_sql(f"(list_transform(generate_series(1, {dim}), i -> pc.e[i] - pc.ccent[i]))[s.sub*{d_sub}+1 : s.sub*{d_sub}+{d_sub}]", 'c.centroid', d_sub)}
+             {SQ_DIST(f"(list_transform(generate_series(1, {dim}), i -> pc.e[i] - pc.ccent[i]))[s.sub*{d_sub}+1 : s.sub*{d_sub}+{d_sub}]", 'c.centroid')}
                AS pd
       FROM pcells pc,
            (SELECT unnest(generate_series(0, {m - 1})) AS sub) s
@@ -1088,8 +1059,7 @@ def _ivfpq_oracle(
     ),
     scored AS (
       SELECT t.pid, e2.id,
-             list_reduce(list_prepend(CAST(0 AS DOUBLE),
-               list(t.pd ORDER BY t.sub)), (a,b) -> a + b) AS adc_dist
+             {ORDERED_SUM("t.pd", "t.sub")} AS adc_dist
       FROM {enc_src} e2
       JOIN ptab t ON t.cell = e2.cell AND t.sub = e2.sub
                  AND t.code = e2.code
@@ -1111,7 +1081,7 @@ def _ivfpq_oracle(
       SELECT probe_id, cand_id FROM (
         SELECT pr.vec_id AS probe_id, ca.vec_id AS cand_id,
                row_number() OVER (PARTITION BY pr.vec_id
-                                  ORDER BY {_sq_sql('pr.e', 'ca.e', dim)},
+                                  ORDER BY {SQ_DIST('pr.e', 'ca.e')},
                                            ca.vec_id) AS rn
         FROM v pr JOIN v ca
           ON pr.vec_id < 5 AND ca.vec_id != pr.vec_id
@@ -1228,12 +1198,9 @@ def _recall_oracle(k: int = 8, iters: int = 2, dim: int = 64) -> str:
     """DuckDB replay of vec_ann_recall_eval: the _ivf_oracle approx set
     joined against the exact brute-force top-5 (same fold-ordered
     cosine), per-probe recall@5."""
-    dists = f"list_transform(s.cents, c -> {_sq_sql('p.e', 'c', dim)})"
+    dists = f"list_transform(s.cents, c -> {SQ_DIST('p.e', 'c')})"
     final = f"c{iters}"
-    cos = (
-        f"{_dot_sql('pr.e', 'ca.e', dim)}"
-        f" / sqrt({_normsq_sql('pr.e')}) / sqrt({_normsq_sql('ca.e')})"
-    )
+    cos = COSINE("pr.e", "ca.e")
     return f"""
     WITH {_kmeans_ctes(k, iters, dim)},
     idx AS MATERIALIZED (
@@ -1262,9 +1229,7 @@ def _recall_oracle(k: int = 8, iters: int = 2, dim: int = 64) -> str:
                                   ORDER BY sim DESC, cand_id) AS rank
         FROM (
           SELECT DISTINCT pc.probe_id, i.cand_id,
-                 {_dot_sql('pc.probe_vec', 'i.cand_vec', dim)}
-                   / sqrt({_normsq_sql('pc.probe_vec')})
-                   / sqrt({_normsq_sql('i.cand_vec')}) AS sim
+                 {COSINE('pc.probe_vec', 'i.cand_vec')} AS sim
           FROM pcells pc JOIN idx i USING (cell)
           WHERE i.cand_id != pc.probe_id
         )
@@ -1332,19 +1297,7 @@ def vec_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     c = v.select(F.col("vec_id").alias("cand_id"), F.col("e").alias("ce"))
-    dot = F.aggregate(
-        F.zip_with(F.col("probe_vec"), F.col("ce"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda col: F.sqrt(
-        F.aggregate(
-            F.transform(col, lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    sim = dot / nrm(F.col("probe_vec")) / nrm(F.col("ce"))
+    sim = cosine(F.col("probe_vec"), F.col("ce"))
     w = W.partitionBy("probe_id").orderBy(F.col("sim").desc(), "cand_id")
     exact = (
         F.broadcast(probes)
@@ -1814,24 +1767,27 @@ def text_count_min_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _guarded_cosine_sql(a: str, b: str) -> str:
+    """(dot/den_a)/den_b with den = 1.0 for a zero vector, sqrt(norm_sq)
+    otherwise — the DuckDB replay of the NumPy cosine in the exact paths
+    of operators/semdedup.py and operators/mmr.py."""
+    den = [
+        f"(CASE WHEN {NORM_SQ(x)} = 0 THEN CAST(1.0 AS DOUBLE)"
+        f" ELSE sqrt({NORM_SQ(x)}) END)"
+        for x in (a, b)
+    ]
+    return f"(({DOT(a, b)} / {den[0]}) / {den[1]})"
+
+
 def _semdedup_oracle(iters: int = 2, dim: int = 64, tau: str = "0.99") -> str:
     """DuckDB replay of text_semdedup: dynamic k = max(8, n/250) exact
     k-means cells, then per-cell pairwise fold-ordered cosine with the
     lowest-earlier-id-above-tau representative rule."""
     k_sql = "SELECT greatest(8, count(*) // 250) FROM v"
-    dists = f"list_transform(s.cents, c -> {_sq_sql('p.e', 'c', dim)})"
+    dists = f"list_transform(s.cents, c -> {SQ_DIST('p.e', 'c')})"
     final = f"c{iters}"
 
-    def den(a: str) -> str:
-        nsq = _normsq_sql(a)
-        return (
-            f"(CASE WHEN {nsq} = 0 THEN CAST(1.0 AS DOUBLE)"
-            f" ELSE sqrt({nsq}) END)"
-        )
-
-    sim = (
-        f"(({_dot_sql('l.e', 'e2.e', dim)} / {den('l.e')}) / {den('e2.e')})"
-    )
+    sim = _guarded_cosine_sql("l.e", "e2.e")
     return f"""
     WITH {_kmeans_ctes(k_sql, iters, dim)},
     asg AS MATERIALIZED (
@@ -1885,7 +1841,7 @@ def text_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_assign_exact(v, k=k, tau=0.99, iters=2).orderBy("vec_id")
 
 
-def _mmr_oracle(k: int = 10, pool: int = 30, dim: int = 64) -> str:
+def _mmr_oracle(k: int = 10, pool: int = 30) -> str:
     """DuckDB replay of vec_mmr_diversify: fold-ordered brute-force
     top-``pool`` retrieval, then ``k`` textually-unrolled greedy MMR
     steps — per step, the (score DESC, cand_id) row_number pick mirrors
@@ -1894,22 +1850,9 @@ def _mmr_oracle(k: int = 10, pool: int = 30, dim: int = 64) -> str:
     lam = "CAST(0.7 AS DOUBLE)"
     oml = f"(CAST(1.0 AS DOUBLE) - {lam})"
 
-    def den(a: str) -> str:
-        nsq = _normsq_sql(a)
-        return (
-            f"(CASE WHEN {nsq} = 0 THEN CAST(1.0 AS DOUBLE)"
-            f" ELSE sqrt({nsq}) END)"
-        )
-
     score = f"{lam} * rel - {oml} * ms"
-    rel_sim = (
-        f"{_dot_sql('p.e', 'c.e', dim)}"
-        f" / sqrt({_normsq_sql('p.e')}) / sqrt({_normsq_sql('c.e')})"
-    )
-    upd_sim = (
-        f"(({_dot_sql('s.cv', 'p.pick_vec', dim)} / {den('s.cv')})"
-        f" / {den('p.pick_vec')})"
-    )
+    rel_sim = COSINE("p.e", "c.e")
+    upd_sim = _guarded_cosine_sql("s.cv", "p.pick_vec")
     parts = [
         f"""v AS MATERIALIZED (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -2562,7 +2505,7 @@ def vec_ann_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_residuals,
         ivfpq_topk,
     )
-    from pyetl_spark.operators.pq import _sq_dist, pq_fit_exact
+    from pyetl_spark.operators.pq import pq_fit_exact
 
     e = load_tables(spark, sf_dir).embeddings
     v = e.select(
@@ -2595,7 +2538,7 @@ def vec_ann_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vec_cosine_topk shape), squared L2 to match what PQ approximates
     c = v.select(F.col("vec_id").alias("cand_id"), F.col("e").alias("ce"))
     w = W.partitionBy("probe_id").orderBy(
-        _sq_dist(F.col("probe_vec"), F.col("ce")), "cand_id"
+        sq_dist(F.col("probe_vec"), F.col("ce")), "cand_id"
     )
     exact = (
         F.broadcast(probes)

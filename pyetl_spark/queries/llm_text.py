@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyetl_spark.parity import FXP, R, fxp, rnd
+from pyetl_spark.parity import FXP, ORDERED_SUM, R, fxp, ordered_sum, rnd
 from pyetl_spark.registry import query
 from pyetl_spark.tables import load_tables
 
@@ -1117,7 +1117,7 @@ def text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_source_divergence",
-    oracle="""
+    oracle=f"""
     WITH st AS (
       SELECT source, t.term, count(*) AS c_st
       FROM documents, unnest(string_split(text, ' ')) AS t(term)
@@ -1138,16 +1138,13 @@ def text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN src_tot USING (source)
       CROSS JOIN tot
     )
-    SELECT source, n_terms, {R} AS kl_divergence
+    SELECT source, n_terms, {R("kl", 4)} AS kl_divergence
     FROM (
       SELECT source, count(*) AS n_terms,
-             list_reduce(
-               list_prepend(0.0, list(kl_term ORDER BY term)),
-               (acc, x) -> acc + x
-             ) AS kl
+             {ORDERED_SUM("kl_term", "term")} AS kl
       FROM contrib GROUP BY source
     )
-    """.replace("{R}", R("kl", 4)),
+    """,
 )
 def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KL divergence of each source's term distribution from the corpus
@@ -1158,9 +1155,8 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism technique: a plain SUM of per-term float contributions is
     summation-order-dependent (partial aggs vs threads), so each source's
     contributions are collected, sorted BY TERM, and folded left-to-right
-    with an explicit lambda on BOTH engines (Spark F.aggregate over
-    array_sort(collect_list(struct)), DuckDB list_reduce over
-    list(... ORDER BY term)) — identical op order → identical bits. The
+    on BOTH engines (parity.ordered_sum / ORDERED_SUM) — identical op
+    order → identical bits. The
     per-source term lists here are vocabulary-bounded (tiny); for open
     vocabularies shard the fold by term-hash prefix and fold the shard
     sums in shard order."""
@@ -1185,16 +1181,7 @@ def text_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     folded = contrib.groupBy("source").agg(
         F.count("*").alias("n_terms"),
-        F.aggregate(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("term", "kl_term"))
-                ),
-                lambda s: s.kl_term,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("kl"),
+        ordered_sum("kl_term", "term").alias("kl"),
     )
     return folded.select(
         "source", "n_terms", rnd(F.col("kl"), 4).alias("kl_divergence")
@@ -1456,7 +1443,7 @@ def text_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_chi_square",
-    oracle="""
+    oracle=f"""
     WITH obs AS (
       SELECT lang, source, count(*) AS o
       FROM documents GROUP BY lang, source
@@ -1480,18 +1467,13 @@ def text_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / CAST(n AS DOUBLE)) AS x2
       FROM margins
     )
-    SELECT n_cells, {R} AS chi_square
+    SELECT n_cells, {R("chi", 4)} AS chi_square
     FROM (
       SELECT count(*) AS n_cells,
-             list_reduce(
-               list_prepend(
-                 0.0, list(x2 ORDER BY lang, source)
-               ),
-               (acc, x) -> acc + x
-             ) AS chi
+             {ORDERED_SUM("x2", "lang", "source")} AS chi
       FROM contrib
     )
-    """.replace("{R}", R("chi", 4)),
+    """,
 )
 def text_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square independence statistic for the lang×source
@@ -1524,16 +1506,7 @@ def text_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     folded = contrib.agg(
         F.count("*").alias("n_cells"),
-        F.aggregate(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("lang", "source", "x2"))
-                ),
-                lambda s: s.x2,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("chi"),
+        ordered_sum("x2", "lang", "source").alias("chi"),
     )
     return folded.select("n_cells", rnd(F.col("chi"), 4).alias("chi_square"))
 

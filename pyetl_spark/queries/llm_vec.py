@@ -1,11 +1,11 @@
 """LLM-pipeline vector operators (SURVEY.md §2.10): norms, centroids,
 brute-force cosine top-k over the embeddings table.
 
-Float discipline: every reduction over an embedding is an explicit
-left-fold with a double zero, written identically in Spark (aggregate) and
-DuckDB (list_reduce + list_prepend) so partial results are bit-identical —
-rankings then compare identical doubles and need only the vec_id tiebreak.
-float32 → float64 casts are lossless.
+Float discipline: every reduction over an embedding is a zero-seeded left
+fold built by the parity.py kernels (``cosine``/``norm_sq`` and their
+DuckDB twins), so partial results are bit-identical — rankings then
+compare identical doubles and need only the vec_id tiebreak. float32 →
+float64 casts are lossless, and both sides cast before folding.
 
 Scale path: brute-force kNN is O(probes × corpus) — fine for a fixed probe
 set, fatal for all-pairs at 100 TB; the LSH-bucketed variant lives in
@@ -17,38 +17,29 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyetl_spark.parity import R, fxp, rnd
+from pyetl_spark.parity import (
+    COSINE,
+    DOT,
+    NORM_SQ,
+    R,
+    cosine,
+    fxp,
+    norm_sq,
+    rnd,
+)
 from pyetl_spark.registry import query
 from pyetl_spark.tables import load_tables
 
-#: DuckDB twin of the explicit-zero left fold used below.
-_SQL_FOLD_SQ = """list_reduce(list_prepend(CAST(0 AS DOUBLE),
-    list_transform({e}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-    (a, x) -> a + x)"""
-
-
 def _to_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
-
-
-def _norm_sq(col: Column) -> Column:
-    """Sum of squares via explicit left fold (zero-seeded)."""
-    return F.aggregate(
-        F.transform(col, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-    )
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 
 @query(
     "vec_norm",
     oracle=f"""
     SELECT vec_id, label,
-           {R('sqrt(' + _SQL_FOLD_SQ.format(e='embedding') + ')', 4)} AS l2_norm,
+           {R(f"sqrt({NORM_SQ('list_transform(embedding, x -> CAST(x AS DOUBLE))')})", 4)}
+             AS l2_norm,
            len(embedding) AS dim
     FROM embeddings
     """,
@@ -60,7 +51,7 @@ def vec_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         "vec_id",
         "label",
-        rnd(F.sqrt(_norm_sq(_to_double(F.col("embedding")))), 4).alias(
+        rnd(F.sqrt(norm_sq(_to_double(F.col("embedding")))), 4).alias(
             "l2_norm"
         ),
         F.size("embedding").alias("dim"),
@@ -134,13 +125,7 @@ def vec_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM embeddings
     ), sims AS (
       SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-             list_reduce(list_prepend(CAST(0 AS DOUBLE),
-               list_transform(generate_series(1, len(p.e)),
-                              i -> p.e[i] * c.e[i])), (a, x) -> a + x)
-             / sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(p.e, x -> x * x)), (a, x) -> a + x))
-             / sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(c.e, x -> x * x)), (a, x) -> a + x))
+             {COSINE('p.e', 'c.e')}
                AS sim
       FROM v p JOIN v c ON p.vec_id < 10 AND c.vec_id <> p.vec_id
     )
@@ -170,11 +155,7 @@ def vec_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = F.broadcast(probes).crossJoin(cands).filter(
         F.col("cand_id") != F.col("probe_id")
     )
-    sim = (
-        _dot(F.col("pe"), F.col("ce"))
-        / F.sqrt(_norm_sq(F.col("pe")))
-        / F.sqrt(_norm_sq(F.col("ce")))
-    )
+    sim = cosine(F.col("pe"), F.col("ce"))
     w = Window.partitionBy("probe_id").orderBy(
         F.col("sim").desc(), F.col("cand_id")
     )
@@ -197,13 +178,7 @@ def vec_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM embeddings WHERE vec_id < 150
     ), pairs AS (
       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-             list_reduce(list_prepend(CAST(0 AS DOUBLE),
-               list_transform(generate_series(1, len(a.e)),
-                              i -> a.e[i] * b.e[i])), (x, y) -> x + y)
-             / sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(a.e, x -> x * x)), (x, y) -> x + y))
-             / sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(b.e, x -> x * x)), (x, y) -> x + y)) AS sim
+             {COSINE('a.e', 'b.e')} AS sim
       FROM v a JOIN v b ON a.vec_id < b.vec_id
     )
     SELECT vec_a, vec_b, {R('sim', 4)} AS cosine_sim
@@ -225,11 +200,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = v.select(F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"))
     b = v.select(F.col("vec_id").alias("vec_b"), F.col("e").alias("eb"))
     pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
-    sim = (
-        _dot(F.col("ea"), F.col("eb"))
-        / F.sqrt(_norm_sq(F.col("ea")))
-        / F.sqrt(_norm_sq(F.col("eb")))
-    )
+    sim = cosine(F.col("ea"), F.col("eb"))
     return (
         pairs.select("vec_a", "vec_b", sim.alias("sim"))
         .filter(F.col("sim") >= 0.25)
@@ -310,26 +281,9 @@ def _pca_oracle(
     scale = f"{float(scale)!r}"
     d2 = dim * dim
 
-    def dot(row: str, v: str) -> str:
-        return (
-            f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-            f"list_transform(generate_series(1,{dim}), k -> {row}[k] * {v}[k])), "
-            f"(a,b) -> a + b)"
-        )
-
-    def norm(l: str) -> str:
-        return (
-            f"sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-            f"list_transform({l}, x -> x * x)), (a,b) -> a + b))"
-        )
-
-    w_expr = f"list_transform(cov, row -> {dot('row', 'v')})"
+    w_expr = f"list_transform(cov, row -> {DOT('row', 'v')})"
+    w_norm = f"sqrt({NORM_SQ(w_expr)})"
     seed_raw = f"list_transform(generate_series(1,{dim}), i -> CAST(i AS DOUBLE))"
-    proj = (
-        f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform(generate_series(1,{dim}), "
-        f"k -> (q.e[k] - c.mean[k]) * c.vc[k])), (a,b) -> a + b)"
-    )
     return f"""
     WITH RECURSIVE q AS MATERIALIZED (
       SELECT vec_id, label,
@@ -371,13 +325,14 @@ def _pca_oracle(
     ),
     power AS (
       SELECT 0 AS it,
-             list_transform({seed_raw}, x -> x / {norm(seed_raw)}) AS v,
+             list_transform({seed_raw}, x -> x / sqrt({NORM_SQ(seed_raw)}))
+               AS v,
              cov, mean
       FROM covm
       UNION ALL
       SELECT it + 1,
-             CASE WHEN {norm(w_expr)} = 0.0 THEN v
-                  ELSE list_transform({w_expr}, x -> x / {norm(w_expr)})
+             CASE WHEN {w_norm} = 0.0 THEN v
+                  ELSE list_transform({w_expr}, x -> x / {w_norm})
              END,
              cov, mean
       FROM power WHERE it < {iters}
@@ -391,9 +346,14 @@ def _pca_oracle(
                   ELSE v END AS vc
       FROM power WHERE it = {iters}
     )
-    SELECT q.vec_id, q.label, {R(proj, 4)} AS pc1
-    FROM q, canon c
-    ORDER BY q.vec_id
+    SELECT vec_id, label, {R(DOT('centered', 'vc'), 4)} AS pc1
+    FROM (
+      SELECT q.vec_id, q.label, c.vc,
+             list_transform(generate_series(1,{dim}), k -> q.e[k] - c.mean[k])
+               AS centered
+      FROM q, canon c
+    )
+    ORDER BY vec_id
     """
 
 
@@ -427,7 +387,7 @@ def vec_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "vec_knn_classify",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT vec_id, label,
              list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
@@ -436,13 +396,7 @@ def vec_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims AS (
       SELECT p.vec_id AS probe_id, p.label AS true_label,
              c.label AS cand_label, c.vec_id AS cand_id,
-             list_reduce(list_prepend(CAST(0 AS DOUBLE),
-               list_transform(generate_series(1, len(p.e)),
-                              i -> p.e[i] * c.e[i])), (a, x) -> a + x)
-             / sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(p.e, x -> x * x)), (a, x) -> a + x))
-             / sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(c.e, x -> x * x)), (a, x) -> a + x))
+             {COSINE('p.e', 'c.e')}
                AS sim
       FROM v p JOIN v c ON p.vec_id < 20 AND c.vec_id >= 20
     ),
@@ -489,11 +443,7 @@ def vec_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("cand_label"),
         F.col("e").alias("ce"),
     )
-    sim = (
-        _dot(F.col("pe"), F.col("ce"))
-        / F.sqrt(_norm_sq(F.col("pe")))
-        / F.sqrt(_norm_sq(F.col("ce")))
-    )
+    sim = cosine(F.col("pe"), F.col("ce"))
     w_rank = Window.partitionBy("probe_id").orderBy(
         F.col("sim").desc(), "cand_id"
     )
@@ -533,13 +483,7 @@ def vec_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), sims AS (
       SELECT p.vec_id AS probe_id, p.label AS probe_label,
              c.vec_id AS cand_id, c.label AS cand_label,
-             list_reduce(list_prepend(CAST(0 AS DOUBLE),
-               list_transform(generate_series(1, len(p.e)),
-                              i -> p.e[i] * c.e[i])), (a, x) -> a + x)
-             / sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(p.e, x -> x * x)), (a, x) -> a + x))
-             / sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(c.e, x -> x * x)), (a, x) -> a + x))
+             {COSINE('p.e', 'c.e')}
                AS sim
       FROM v p JOIN v c ON p.vec_id < 10 AND c.label <> p.label
     )
@@ -582,11 +526,7 @@ def vec_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = F.broadcast(probes).crossJoin(cands).filter(
         F.col("cand_label") != F.col("probe_label")
     )
-    sim = (
-        _dot(F.col("pe"), F.col("ce"))
-        / F.sqrt(_norm_sq(F.col("pe")))
-        / F.sqrt(_norm_sq(F.col("ce")))
-    )
+    sim = cosine(F.col("pe"), F.col("ce"))
     w = Window.partitionBy("probe_id").orderBy(
         F.col("sim").desc(), F.col("cand_id")
     )
@@ -711,21 +651,6 @@ def vec_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mat_prefix_sim(d: int) -> str:
-    """DuckDB cosine over the first ``d`` dims, fold-ordered exactly like
-    the Spark ``_dot``/``_norm_sq`` kernels (same left-to-right adds)."""
-    dot = (
-        "list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform(generate_series(1, {d}), i -> pe[i] * ce[i])), "
-        "(a, x) -> a + x)"
-    )
-    nrm = (
-        "sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        "list_transform({v}[1:%d], x -> x * x)), (a, x) -> a + x))" % d
-    )
-    return f"{dot} / {nrm.format(v='pe')} / {nrm.format(v='ce')}"
-
-
 def _mat_topk(d: int) -> str:
     return f"""
       SELECT {d} AS dim, probe_id, cand_id FROM (
@@ -748,7 +673,7 @@ def _mat_topk(d: int) -> str:
     ),
     sims AS (
       SELECT probe_id, cand_id,
-             {", ".join(f"{_mat_prefix_sim(d)} AS sim_{d}" for d in (8, 16, 32, 64))}
+             {", ".join(COSINE(f"pe[1:{d}]", f"ce[1:{d}]") + f" AS sim_{d}" for d in (8, 16, 32, 64))}
       FROM pairs
     ),
     topk AS ({" UNION ALL ".join(_mat_topk(d) for d in (8, 16, 32, 64))}
@@ -803,12 +728,8 @@ def vec_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "probe_id",
         "cand_id",
         *[
-            (
-                _dot(
-                    F.slice(F.col("pe"), 1, d), F.slice(F.col("ce"), 1, d)
-                )
-                / F.sqrt(_norm_sq(F.slice(F.col("pe"), 1, d)))
-                / F.sqrt(_norm_sq(F.slice(F.col("ce"), 1, d)))
+            cosine(
+                F.slice(F.col("pe"), 1, d), F.slice(F.col("ce"), 1, d)
             ).alias(f"sim_{d}")
             for d in dims
         ],

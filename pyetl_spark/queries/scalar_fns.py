@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyetl_spark.parity import R, rnd
+from pyetl_spark.parity import DOT, NORM_SQ, R, dot, norm_sq, rnd
 from pyetl_spark.registry import query
 from pyetl_spark.tables import load_tables
 
@@ -285,14 +285,9 @@ def fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM embeddings WHERE vec_id < 100
     )
     SELECT vec_id,
-           {R('''list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(e, x -> x * x)), (a, x) -> a + x)''', 4)}
-             AS norm_sq,
+           {R(NORM_SQ('e'), 4)} AS norm_sq,
            len(list_filter(e, x -> x > 0)) AS n_pos,
-           {R('''list_reduce(list_prepend(CAST(0 AS DOUBLE),
-                 list_transform(generate_series(1, len(e)),
-                                i -> e[i] * list_reverse(e)[i])),
-                 (a, x) -> a + x)''', 4)} AS dot_rev,
+           {R(DOT('e', 'list_reverse(e)'), 4)} AS dot_rev,
            {R('list_reduce(list_prepend(CAST(0 AS DOUBLE), e), (a, x) -> a + CASE WHEN x > 0 THEN x ELSE CAST(0 AS DOUBLE) END)', 4)}
              AS sum_pos
     FROM v
@@ -308,25 +303,16 @@ def fn_array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir).embeddings
     ed = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     base = e.filter(F.col("vec_id") < 100).select("vec_id", ed.alias("e"))
-    zero = F.lit(0.0)
-    norm_sq = F.aggregate(
-        F.transform(F.col("e"), lambda x: x * x), zero, lambda a, x: a + x
-    )
-    dot_rev = F.aggregate(
-        F.zip_with(F.col("e"), F.reverse(F.col("e")), lambda a, b: a * b),
-        zero,
-        lambda a, x: a + x,
-    )
     sum_pos = F.aggregate(
         F.col("e"),
-        zero,
+        F.lit(0.0),
         lambda a, x: a + F.when(x > 0, x).otherwise(0.0),
     )
     return base.select(
         "vec_id",
-        rnd(norm_sq, 4).alias("norm_sq"),
+        rnd(norm_sq(F.col("e")), 4).alias("norm_sq"),
         F.size(F.filter(F.col("e"), lambda x: x > 0)).alias("n_pos"),
-        rnd(dot_rev, 4).alias("dot_rev"),
+        rnd(dot(F.col("e"), F.reverse(F.col("e"))), 4).alias("dot_rev"),
         rnd(sum_pos, 4).alias("sum_pos"),
     )
 

@@ -314,12 +314,10 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     Synthetic by construction, so sf-independent (like `source_range`);
     the API surface under test is partition planning + per-task iteration,
     not data volume."""
-    from pyetl_spark.operators.pydatasource import (
-        SyntheticEventsSource,
-        ship_by_value,
-    )
+    from pyetl_spark.operators.pydatasource import SyntheticEventsSource
+    from pyetl_spark.session import ship_by_value
 
-    ship_by_value()  # workers may not have the repo on PYTHONPATH
+    ship_by_value(SyntheticEventsSource.__module__)
     # Registration is session-global and re-registration REPLACES the
     # previous entry (probed on pyspark 4.1: DataSourceManager logs a WARN
     # and overwrites), so register unconditionally — no exception-text

@@ -31,7 +31,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pyetl_spark.parity import FXP, PHASH60, PHASH60_SEEDED, R, fxp, rnd
+from pyetl_spark.parity import (
+    FXP,
+    ORDERED_SUM,
+    PHASH60,
+    PHASH60_SEEDED,
+    R,
+    fxp,
+    ordered_sum,
+    rnd,
+)
 from pyetl_spark.registry import query
 from pyetl_spark.tables import load_tables
 
@@ -228,10 +237,7 @@ def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(count(DISTINCT lang) AS BIGINT) AS r_levels,
              CAST(count(DISTINCT source) AS BIGINT) AS c_levels,
              CAST(max(n) AS BIGINT) AS n,
-             list_reduce(
-               list_prepend(0.0, list(x2 ORDER BY lang, source)),
-               (acc, x) -> acc + x
-             ) AS chi
+             {ORDERED_SUM("x2", "lang", "source")} AS chi
       FROM cells
     )
     SELECT n_cells, r_levels, c_levels,
@@ -282,14 +288,7 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("lang").alias("r_levels"),
         F.countDistinct("source").alias("c_levels"),
         F.max("n").alias("n"),
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("lang", "source", "x2"))),
-                lambda s: s.x2,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("chi"),
+        ordered_sum("x2", "lang", "source").alias("chi"),
     )
     dof = F.least(
         F.col("r_levels") - 1, F.col("c_levels") - 1
@@ -1283,10 +1282,8 @@ _PSI_BUCKETS = 20
       FROM cells CROSS JOIN tot
     )
     SELECT CAST(count(*) AS BIGINT) AS n_buckets,
-           {R("list_reduce(list_prepend(0.0, list(x ORDER BY b)),"
-              " (acc, v) -> acc + v)", 6)} AS psi,
-           list_reduce(list_prepend(0.0, list(x ORDER BY b)),
-                       (acc, v) -> acc + v) > 0.2 AS drift_alert
+           {R(ORDERED_SUM("x", "b"), 6)} AS psi,
+           {ORDERED_SUM("x", "b")} > 0.2 AS drift_alert
     FROM contrib
     """,
 )
@@ -1339,14 +1336,7 @@ def agg_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     folded = contrib.agg(
         F.count("*").alias("n_buckets"),
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("b", "x"))),
-                lambda s: s.x,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ).alias("psi_raw"),
+        ordered_sum("x", "b").alias("psi_raw"),
     )
     return folded.select(
         "n_buckets",

@@ -31,195 +31,25 @@ ORACLE: dict[str, str] = {}
 #: window this round; everything else follows in registration order and
 #: earns its row in a later round's rotation.
 #:
-#: ROTATION HISTORY (~50 verifiable slots/round; 362 declared keys, 325
-#: with oracles after the r7 conversions; 286 distinct driver-verified
-#: after r6):
-#:   r1 (done, 50 green): first 50 in registration order.
-#:   r2 (done, 50 green): remaining SURVEY §2 keys + r1 fixes + sinks.
-#:   r3 (done, 50 green): analytics/events head, windows extras,
-#:       extras.py, joins tail, text head.
-#:   r4 (done, 50 green): pre-r3 tail + 5 r1 re-verifies. One slot
-#:       (subq_scalar) later found vacuous — re-queued in r5 after the
-#:       predicate fix.
-#:   r5 (done, 50 green): 45 never-verified oracle keys + subq_scalar
-#:       re-verify + 4 oldest-evidence (r2) re-verifies. Pre-gated by the
-#:       full-registry canon sweep at 4 SFs + determinism + the
-#:       empty-result lint (canon_sweep_r5_*.jsonl).
-#:   r6 (done, 50 green): the next 50 never-verified oracle keys
-#:       (win_gaps_islands … vec_knn_classify). Gating evidence: the r5
-#:       full-362-key canon sweep at sf0.001/sf0.01
-#:       (canon_sweep_r5_full362_sf001.jsonl, *_sf01 predecessors) +
-#:       determinism_sweep_r5_full360.jsonl — the r6 micro-session
-#:       (67 s) did NOT re-run the gate; a prior comment here cited a
-#:       nonexistent EVIDENCE_r6.md for that re-run, corrected in r7
-#:       (the r5 artifacts are the actual evidence; see EVIDENCE_r7.md).
-#:   r7 (done, 49 hash + 1 rows-only green): ALL 47 remaining
-#:       never-verified oracle keys
-#:       in registration order (42 from the r6 draft + the 5 keys
-#:       converted rows-only → oracle this round: vec_pca_project,
-#:       agg_approx_percentile, text_pack_greedy, sink_orc,
-#:       sink_parquet_zstd) + 3 never-verified rows-only keys. The
-#:       rows-only picks deviate from registration order deliberately:
-#:       the two flagship 100 TB pipelines the r6 verdict called out as
-#:       evidence-free (pipeline_training_corpus_neardup, text_semdedup)
-#:       go first, then win_ewma (first rows-only in registration order
-#:       at window-computation time). win_ewma AND text_semdedup were
-#:       converted to Tier-A later in r7 (recursive-CTE EWMA replay;
-#:       exact-k-means semdedup replay), so 49 of the 50 slots are
-#:       hash-checked — only pipeline_training_corpus_neardup stays
-#:       rows-only. Gating: r7 consolidated canon sweeps
-#:       (canon_sweep_r7_changed_* + canon_sweep_r7_window_*) +
-#:       determinism + empty-result lint; see EVIDENCE_r7.md.
-#:   r8 (done, 50 green — 42 hash + 8 rows-only-by-design): all 27
-#:       never-verified keys + the 6 stale-row keys + revenue_pareto
-#:       (re-routed that round) + 16 oldest-evidence (r1) fills.
-#:   r8+ draft (written in r7): the 14 keys converted rows-only → Tier-A late in r7 AFTER the
-#:       window was pinned (ts_forecast_holt, dedup_exact_substring_spans,
-#:       sink_bucketed_join, sink_schema_evolution,
-#:       sink_dpp_partitioned_join, sink_manifest_atomic_publish,
-#:       sink_snapshot_time_travel, vec_ann_ivf, vec_ann_recall_eval,
-#:       graph_pagerank, vec_mmr_diversify, agg_hll_sketch_merge,
-#:       vec_ann_ivf_persisted, vec_pq_adc_topk — each gated at 4 SFs +
-#:       determinism, canon_sweep_r7_changed_*.jsonl) + the new
-#:       `text_contamination_check` key (eval-set decontamination,
-#:       added late r7, gated at 4 SFs + determinism + planted-copy
-#:       invariant test), then the remaining never-verified
-#:       rows-only keys (a rows-only row is the marginal evidence unit
-#:       for them), then steady-state
-#:       re-verify rotation, oldest evidence first — starting with the
-#:       three subquery keys whose results CHANGED in r7 (subq_scalar,
-#:       subq_correlated, subq_dormant_high_balance: engine-exact
-#:       integer-division thresholds replaced the truncate-vs-round
-#:       CAST(avg); their r4/r5 driver rows predate the fix, own-sweep
-#:       evidence in canon_sweep_r7_changed_*.jsonl), plus any new keys
-#:       and any reds from the prior round.
-#:   r9 (done, 49 hash + 1 rows-only green): with the r8 window landed,
-#:       never-verified is ZERO
-#:       (recomputed this session from CORRECTNESS_r01..r08 vs the
-#:       363-key registry) and there were no r8 reds; the window is
-#:       pure steady-state rotation — see the list below.
-#:   r10 (done, 50 green — 42 hash + 8 rows-only-by-design): zero r9
-#:       reds, so the window was the draft made
-#:       concrete: the four changed keys first —
-#:       pipeline_training_corpus_neardup (rows-only → Tier-A this
-#:       round via the r9 namespaced-planting technique, gated at
-#:       sf0.001/0.01/0.1 + determinism), pipeline_curation_full
-#:       (rides the r9/r10 minhash pre-collapse + fused-collapse code,
-#:       and takes over the bench corpus-pipeline sentinel slot),
-#:       dedup_minhash_lsh (same code change; also the oldest r2
-#:       evidence), dedup_winnowing (its oracle gained the null-text
-#:       CASE guard after its r9 row — vacuous on the current fixture,
-#:       re-slotted anyway) — then the remaining 30 r2-evidence keys in
-#:       registration order (fn_string … sink_multi), then 16
-#:       r3-evidence head fills (join_returned_revenue_top …
-#:       win_streak). Lands the r9 verdict's #1: after this window no
-#:       key's latest evidence predates r3.
-#:   r11 (done, 50 green): zero r10 reds, so the draft made concrete —
-#:       5 changed + 1 NEW key first (pipeline_curation_full:
-#:       try/finally unpersist, r10 advisory; dedup_minhash_incremental
-#:       + dedup_minhash_lsh + pipeline_training_corpus_neardup: ride
-#:       the minhash_index param-stamp and the compiled `_signature_sql`
-#:       build-cost trim; dedup_minhash_index_maintenance: NEW — the
-#:       index-append leg of the daily-ingest contract; dedup_simhash:
-#:       compiled 64-term bit-majority SQL — all gated at 3 SFs +
-#:       determinism, canon_sweep_r11_buildcost_*.jsonl +
-#:       canon_sweep_r11_idxmaint_*.jsonl), then ALL 31 r3-evidence
-#:       keys (events_session_conversion … text_quality_score,
-#:       registration order), then 13 r4-evidence head fills
-#:       (scan_parquet_project … agg_pivot) — 50 total. Lands the r10
-#:       verdict's #2: after this window no key's evidence predates r4
-#:       and the rotation is steady-state (oldest ≤ 2 rounds back).
-#:   r12 (done, 50 green — 48 hash + 2 rows-only-by-design): zero
-#:       r11 reds, so the draft made concrete — the THREE
-#:       NEW keys first (dedup_paragraph_global: CCNet-style global
-#:       paragraph-hash boilerplate strip; vec_ann_ivfpq: coarse-cell +
-#:       residual-PQ ANN, the composed billion-scale index;
-#:       vec_ann_ivfpq_persisted: its persisted-index lifecycle twin;
-#:       all with no CORRECTNESS row yet, each gated at 3 SFs +
-#:       determinism before pinning), then the 5 keys riding this round's
-#:       operators/minhash.py hardening (empty/null-token exclusion
-#:       from minhash_index, backtick-safe compiled signature SQL,
-#:       append-side param-stamp guard on minhash_index_delta — all
-#:       gated by canon_sweep_r12_advfix_* +
-#:       determinism_sweep_r12_advfix), then ALL 34 r4-evidence keys
-#:       (subq_exists_late_orders … text_repetition, registration
-#:       order), then 8 r5-evidence head fills
-#:       (source_json_corrupt_records … etl_fk_integrity) — 50 total.
-#:       Lands the r11 verdict's #1: after this window no key's
-#:       evidence predates r5 and the rotation self-sustains at
-#:       "oldest ≤ 2 rounds back".
-#:   r13 (this): zero r12 reds, so the draft made concrete — the NEW
-#:       key first (vec_ann_ivfpq_index_maintenance: the append leg of
-#:       the persisted IVF-PQ lifecycle — assign-to-existing + encode-
-#:       with-existing, stamp-guarded; gated at 3 SFs + determinism
-#:       before pinning), then the 2 keys riding this round's
-#:       ivfpq_encode refactor + exclude_self explicitization
-#:       (vec_ann_ivfpq, vec_ann_ivfpq_persisted — outputs unchanged,
-#:       re-slotted anyway because their builders changed;
-#:       canon_r13_ivfpq gates), then ALL 41 r5-evidence keys
-#:       (etl_freshness_lag … ts_interpolate_linear, registration
-#:       order), then 4 r6-evidence head fills (win_gaps_islands …
-#:       graph_neighbor_jaccard) — 50 total (the second and third NEW
-#:       keys — vec_ann_ivfpq_compacted, the full disk lifecycle:
-#:       stream-kernel ingest + compaction, same oracle as the
-#:       maintenance key; and vec_ann_ivfpq_recall_eval, the
-#:       hash-verified recall@5 of the composed index — landed late in
-#:       the round and took the last two fills' slots). Lands the r12
-#:       verdict's #3: after this window no key's driver evidence
-#:       predates r6.
-#:   r14 (this): zero r13 reds. The r14 code changes (r13 ADVICE
-#:       closures: ivfpq_topk stamp-check delegation to
-#:       stamps.check_stamp, latest_codes column parameters, bench
-#:       triage skip) are output-identical on keys that ALL carry
-#:       fresh r13 driver rows — re-verified hash-equal vs DuckDB from
-#:       a clean process on the changed tree (EVIDENCE_r14.md) — so,
-#:       unlike r12/r13 (which had free slots), no slot is spent
-#:       re-verifying them. ALL 50 slots go to staleness: the 46
-#:       remaining r6-evidence keys (registration order,
-#:       sample_neyman_allocation … vec_knn_classify) + 4 r7-evidence
-#:       head fills (win_ewma … vec_matryoshka_eval). Lands the r13
-#:       verdict's #2: after this window no key's driver evidence
-#:       predates r7 — the second full rotation cycle closes.
-#:   r15 (this): zero r14 reds (CORRECTNESS_r14 50/50). The FOUR keys
-#:       converted rows-only → Tier-A late in r14 AFTER the window was
-#:       pinned (their oracles have no driver row yet — same precedent
-#:       as the late-r7 conversions): sink_compact_small_files,
-#:       sink_zorder_layout, grouped_map_applyInPandas,
-#:       map_partitions_arrow (own-sweep gates:
-#:       canon_sweep_r14_{compact,zorder,udfconv}_*.jsonl +
-#:       strict-value determinism) + text_quality_classifier
-#:       (converted IN r15: replay-parity logistic trainer, the last
-#:       learned-scorer rows-only key — canon-gated at 3 SFs + strict
-#:       determinism) + the remaining 42 r7-evidence keys
-#:       (registration order, text_count_min_freq … geo_grid_density)
-#:       + 3 r8-evidence head fills (filter_like_regex …
-#:       etl_type_cast). Lands the r14 verdict's #1: after this window
-#:       every hash-verifiable key's driver evidence is r8+ and all
-#:       five conversions carry CORRECTNESS rows.
-#:   r16 (this): zero r15 reds (CORRECTNESS_r15 50/50). The r15 window
-#:       was pinned BEFORE the r15 optimizations landed (VERDICT r15
-#:       item 4), so slots 1-36 are every key the r15+r16 optimization
-#:       work touches — the whole minhash/simhash/winnowing/kmeans/
-#:       graph/curation operator families plus the r16 re-touched
-#:       text_count_min_freq and text_semdedup — in the verdict's own
-#:       order. Slots 37-50: the oldest-evidence (r8) keys in
-#:       registration order, continuing the rotation (8 of the 35
-#:       r8-evidence keys already sit in the touched set).
 #: Mechanically: PRIORITY = (reds/vacuous from last round) + (oracle keys
 #: with no CORRECTNESS row, registration order) + (rows-only keys with no
-#: row) + (stale/oldest-evidence keys), truncated to 50.
+#: row) + (stale/oldest-evidence keys), truncated to 50. Earlier windows
+#: and why each was chosen: ``git log -p pyetl_spark/registry.py``.
+#:
+#: A key without an oracle is a rows-only slot: the driver records its
+#: row count, not a hash, so it is marked below.
 PRIORITY: list[str] = [
-    # r16 window (see rotation history above): slots 1-36 are the
-    # r15+r16-touched operator families — VERDICT r15 item 4 requires
-    # driver correctness rows for every key the optimization rounds
-    # touched (the r15 window predated the r15 changes). Order follows
-    # the verdict's own list, then the remaining touched consumers.
+    # r16 window: slots 1-36 are the r15+r16-touched operator families —
+    # VERDICT r15 item 4 requires driver correctness rows for every key
+    # the optimization rounds touched (the r15 window predated the r15
+    # changes). Order follows the verdict's own list, then the remaining
+    # touched consumers.
     "dedup_allpairs_prefix",
     "etl_quality_checks",
     "graph_pagerank",
     "graph_label_propagation",
-    "pipeline_curation_full",
-    "dedup_minhash_lsh",
+    "pipeline_curation_full",  # rows-only slot
+    "dedup_minhash_lsh",  # rows-only slot
     "pipeline_training_corpus_neardup",
     "dedup_minhash_incremental",
     "dedup_minhash_index_maintenance",
@@ -240,7 +70,7 @@ PRIORITY: list[str] = [
     "text_semdedup",
     "multimodal_features",
     "multimodal_cdc_chunks",
-    "dedup_winnowing_corpus",
+    "dedup_winnowing_corpus",  # rows-only slot
     "dedup_winnowing",
     "text_winnowing_fingerprint",
     "dedup_ngram_jaccard",
@@ -259,7 +89,7 @@ PRIORITY: list[str] = [
     "agg_groupby_pricing",
     "agg_global",
     "agg_count_distinct",
-    "agg_approx_distinct",
+    "agg_approx_distinct",  # rows-only slot
     "agg_having",
     "agg_conditional",
     "agg_stats",

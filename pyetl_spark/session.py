@@ -23,6 +23,7 @@ cluster; initial shuffle partitions come from PYETL_SHUFFLE_PARTITIONS (at
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -73,3 +74,21 @@ def get_session(app_name: str = "pyetl-spark") -> SparkSession:
     for key, value in ENGINE_CONFS.items():
         builder = builder.config(key, value)
     return tune(builder.getOrCreate())
+
+
+def ship_by_value(module_name: str) -> None:
+    """Pickle ``module_name``'s code into Python-worker task closures.
+
+    Closures handed to mapInPandas, applyInPandas and Python data sources
+    call module-level helpers, which cloudpickle serializes by REFERENCE
+    to ``pyetl_spark...``. That import works where the repo is on the
+    executors' PYTHONPATH (pytest from the repo root) and fails when a
+    driver imports the package from elsewhere. Registering the module for
+    by-value pickling ships its code inside each task instead: the posture
+    a real cluster needs unless the package is installed on every
+    executor. It must be pyspark's VENDORED cloudpickle — workers
+    deserialize through pyspark.serializers, which never sees
+    registrations made on the standalone cloudpickle package."""
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(sys.modules[module_name])

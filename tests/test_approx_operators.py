@@ -1214,7 +1214,7 @@ def test_embedding_fixture_has_no_near_pairs(spark, sf_dir):
 
     if not os.path.isdir(sf_dir):
         pytest.skip(f"{sf_dir} absent")
-    from pyetl_spark.operators.knn import _dot, _norm_sq
+    from pyetl_spark.parity import cosine
 
     e = (
         load_tables(spark, sf_dir)
@@ -1226,11 +1226,7 @@ def test_embedding_fixture_has_no_near_pairs(spark, sf_dir):
     )
     a = e.select(F.col("vec_id").alias("ia"), F.col("e").alias("ea"))
     b = e.select(F.col("vec_id").alias("ib"), F.col("e").alias("eb"))
-    sim = (
-        _dot(F.col("ea"), F.col("eb"))
-        / F.sqrt(_norm_sq(F.col("ea")))
-        / F.sqrt(_norm_sq(F.col("eb")))
-    )
+    sim = cosine(F.col("ea"), F.col("eb"))
     mx = (
         a.crossJoin(b)
         .filter(F.col("ia") < F.col("ib"))

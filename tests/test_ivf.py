@@ -207,7 +207,8 @@ def test_localize_rows_exact_roundtrip_and_no_jobs(spark):
     LocalRelation: values/types must round-trip EXACTLY (doubles via
     repr + correctly-rounded literal parsing, incl. subnormal-ish and
     scientific-notation magnitudes), and collecting the result must
-    schedule no Spark job (the whole point vs createDataFrame)."""
+    schedule no Spark job (the whole point vs createDataFrame). NaN and
+    ±inf have no SQL literal and must round-trip too."""
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -228,6 +229,7 @@ def test_localize_rows_exact_roundtrip_and_no_jobs(spark):
         (0, [0.1, -0.0, 1e-17, 123456.789]),
         (1, [float.fromhex("0x1.fffffffffffffp+1"), -2.5e300, 0.0]),
         (2, None),
+        (3, [float("nan"), float("inf"), float("-inf"), 1.0]),
     ]
     df = localize_rows(spark, vals, schema)
     assert [str(f.dataType) for f in df.schema.fields] == [

@@ -6,6 +6,8 @@ negatives, negative ties, huge/tiny magnitudes, and a seeded random sweep.
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
 # fast-lane member (pyproject [tool.pytest.ini_options] markers):
@@ -231,6 +233,195 @@ def test_phash60_seeded_matches_duckdb_twin_exact(spark, duck):
     for (s, t), v in zip(rows, (got[i] for i in range(len(rows)))):
         by_tok.setdefault(t, set()).add(v)
     assert all(len(vs) == 4 for vs in by_tok.values())
+
+
+
+# ---------------------------------------------------------------------------
+# Fold kernels (dot / norm_sq / sq_dist / cosine / ordered_sum): every
+# vector reduction is a zero-seeded ascending left fold, so the Spark
+# form, the DuckDB twin and a plain Python loop give the same bits.
+
+
+def _f32_vectors(n=40, dim=64, seed=5):
+    """Seeded float32 vectors widened to double (lossless), the way the
+    embedding columns reach the folds."""
+    rng = np.random.default_rng(seed)
+    return rng.standard_normal((n, dim)).astype(np.float32).astype(np.float64)
+
+
+def _py_fold(xs) -> float:
+    acc = 0.0
+    for x in xs:
+        acc += x
+    return acc
+
+
+def _py_kernel(kernel, a, b):
+    if kernel == "dot":
+        return _py_fold(x * y for x, y in zip(a, b))
+    if kernel == "norm_sq":
+        return _py_fold(x * x for x in a)
+    if kernel == "sq_dist":
+        return _py_fold((x - y) * (x - y) for x, y in zip(a, b))
+    return (
+        _py_kernel("dot", a, b)
+        / math.sqrt(_py_kernel("norm_sq", a, None))
+        / math.sqrt(_py_kernel("norm_sq", b, None))
+    )
+
+
+@pytest.mark.parametrize("kernel", ["dot", "norm_sq", "sq_dist", "cosine"])
+def test_vector_fold_kernels_match_duckdb_twin_bitwise(spark, duck, kernel):
+    import pyarrow as pa
+
+    from pyetl_spark import parity
+
+    a, b = _f32_vectors(seed=5), _f32_vectors(seed=6)
+    rows = [(i, a[i].tolist(), b[i].tolist()) for i in range(len(a))]
+    df = spark.createDataFrame(rows, "i long, a array<double>, b array<double>")
+    unary = kernel == "norm_sq"
+    col_args = (F.col("a"),) if unary else (F.col("a"), F.col("b"))
+    sql_args = ("a",) if unary else ("a", "b")
+    got = {
+        r["i"]: r["y"].hex()
+        for r in df.select(
+            "i", getattr(parity, kernel)(*col_args).alias("y")
+        ).collect()
+    }
+    lists = pa.list_(pa.float64())
+    duck.register(
+        "_folds",
+        pa.table(
+            {
+                "i": pa.array([r[0] for r in rows], pa.int64()),
+                "a": pa.array([r[1] for r in rows], lists),
+                "b": pa.array([r[2] for r in rows], lists),
+            }
+        ),
+    )
+    sql = getattr(parity, kernel.upper())(*sql_args)
+    want = {
+        i: y.hex()
+        for i, y in duck.execute(f"SELECT i, {sql} FROM _folds").fetchall()
+    }
+    py = {i: _py_kernel(kernel, ra, rb).hex() for i, ra, rb in rows}
+    assert got == want == py
+
+
+def test_ordered_sum_matches_duckdb_twin_on_shuffled_rows(spark, duck):
+    """The fold runs in (k1, k2) order whatever order the rows arrive
+    in: shuffled input, 7 partitions, and DuckDB all give the bits of
+    the sorted Python fold. Values mix magnitudes so a different add
+    order would change the result."""
+    import random
+
+    import pandas as pd
+
+    from pyetl_spark.parity import ORDERED_SUM, ordered_sum
+
+    vals = _f32_vectors(n=6, dim=64, seed=9)
+    rows = [
+        (g, k % 4, k, float(vals[g, k]) * 10.0 ** (k % 9 - 4))
+        for g in range(len(vals))
+        for k in range(vals.shape[1])
+    ]
+    want = {
+        g: _py_fold(v for gg, _, _, v in sorted(rows) if gg == g).hex()
+        for g in range(len(vals))
+    }
+    shuffled = list(rows)
+    random.Random(3).shuffle(shuffled)
+    df = spark.createDataFrame(
+        shuffled, "g long, k1 long, k2 long, v double"
+    ).repartition(7)
+    got = {
+        r["g"]: r["s"].hex()
+        for r in df.groupBy("g")
+        .agg(ordered_sum("v", "k1", "k2").alias("s"))
+        .collect()
+    }
+    duck.register("_osum", pd.DataFrame(shuffled, columns=["g", "k1", "k2", "v"]))
+    duck_sum = ORDERED_SUM("v", "k1", "k2")
+    duck_got = {
+        g: s.hex()
+        for g, s in duck.execute(
+            f"SELECT g, {duck_sum} FROM _osum GROUP BY g"
+        ).fetchall()
+    }
+    assert got == duck_got == want
+    # the data is order-sensitive: the reverse fold differs somewhere
+    assert any(
+        _py_fold(v for gg, _, _, v in sorted(rows, reverse=True) if gg == g).hex()
+        != want[g]
+        for g in want
+    )
+
+
+def test_fold_kernels_and_worker_shipping_have_one_home():
+    """Source lint: ``register_pickle_by_value`` appears only in
+    session.py (``ship_by_value``), and outside parity.py no module
+    writes its own double-seeded fold — neither ``F.aggregate`` with a
+    ``F.lit(0.0)`` seed nor a DuckDB ``list_prepend`` of a double zero.
+    The allowlist is exact: (module, function) -> number of folds."""
+    import ast
+    import pathlib
+    import re
+
+    allowed = {
+        # dot products against literal ±1 SRP planes: a different concept
+        # from the two-column dot, with its own SQL-text twin (_dot_sql)
+        ("operators/knn.py", "_dot_lit"): 1,
+        # the conditional sum_pos fold (Spark form + DuckDB twin): adds
+        # max(x, 0), not a vector kernel
+        ("queries/scalar_fns.py", "fn_array_higher_order"): 2,
+    }
+    sql_fold = re.compile(
+        r"list_prepend\(\s*(CAST\(\s*0\s+AS\s+DOUBLE\s*\)|0\.0\b)"
+    )
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "pyetl_spark"
+    pickles, found = [], {}
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        src = path.read_text()
+        if "register_pickle_by_value" in src and rel != "session.py":
+            pickles.append(rel)
+        if rel == "parity.py":
+            continue
+        tree = ast.parse(src)
+        funcs = [
+            n for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+
+        def owner(lineno, funcs=funcs):
+            inner = [
+                f for f in funcs
+                if min([f.lineno] + [d.lineno for d in f.decorator_list])
+                <= lineno <= f.end_lineno
+            ]
+            return max(inner, key=lambda f: f.lineno).name if inner else "<module>"
+
+        hits = []
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "aggregate"
+                and len(n.args) >= 2
+                and ast.unparse(n.args[1]) == "F.lit(0.0)"
+            ):
+                hits.append(n.lineno)
+        hits += [
+            src.count("\n", 0, m.start()) + 1 for m in sql_fold.finditer(src)
+        ]
+        for lineno in hits:
+            key = (rel, owner(lineno))
+            found[key] = found.get(key, 0) + 1
+    assert pickles == [], f"register_pickle_by_value outside session.py: {pickles}"
+    assert found == allowed, (
+        "hand-written double-seeded folds outside parity.py (use "
+        f"parity.dot/norm_sq/sq_dist/cosine/ordered_sum): {found}"
+    )
 
 
 def test_poisson_thresholds_are_valid_cdf_grid():
