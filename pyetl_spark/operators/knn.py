@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyetl_spark.parity import cosine
+from pyetl_spark.parity import cosine, dot
 
 
 def scramble(x: int) -> int:
@@ -49,21 +49,13 @@ def _planes(n_bits: int, dim: int, seed: int) -> list[list[float]]:
     ]
 
 
-def _dot_lit(vec: Column, plane: list[float]) -> Column:
-    lit_plane = F.array(*[F.lit(p) for p in plane])
-    return F.aggregate(
-        F.zip_with(vec, lit_plane, lambda x, p: x * p),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-
-
 def _dot_sql(vec_sql: str, plane: list[float]) -> str:
-    """SQL-text twin of ``_dot_lit`` — same aggregate(zip_with(...)) left
-    fold, so the resulting doubles are bit-identical; built as ONE string
-    so the whole plane bank costs one parser call instead of ~dim Py4J
-    round-trips per plane (the r8 bench regression in vec_ann_lsh was
-    exactly this: plan CONSTRUCTION, not execution, grew past exec time).
+    """Spark SQL text of ``parity.dot(vec, plane)`` — the same
+    aggregate(zip_with(...)) left fold, so the resulting doubles are
+    bit-identical; built as ONE string so the whole plane bank costs one
+    parser call instead of ~dim Py4J round-trips per plane (the r8 bench
+    regression in vec_ann_lsh was exactly this: plan CONSTRUCTION, not
+    execution, grew past exec time).
 
     ``vec_sql`` is a column NAME and is backtick-quoted, so names that
     aren't plain identifiers (spaces, dashes, reserved words — all legal
@@ -97,7 +89,10 @@ def srp_signature(
         )
         return F.expr(terms)
     bits = [
-        F.when(_dot_lit(vec, plane) > 0, F.shiftleft(F.lit(1).cast("long"), j))
+        F.when(
+            dot(vec, F.array(*[F.lit(p) for p in plane])) > 0,
+            F.shiftleft(F.lit(1).cast("long"), j),
+        )
         .otherwise(0)
         .cast("long")
         for j, plane in enumerate(_planes(n_bits, dim, seed))

@@ -361,23 +361,67 @@ def test_fold_kernels_and_worker_shipping_have_one_home():
     """Source lint: ``register_pickle_by_value`` appears only in
     session.py (``ship_by_value``), and outside parity.py no module
     writes its own double-seeded fold — neither ``F.aggregate`` with a
-    ``F.lit(0.0)`` seed nor a DuckDB ``list_prepend`` of a double zero.
-    The allowlist is exact: (module, function) -> number of folds."""
+    double-zero seed (written inline or bound to a name), nor Spark SQL
+    text ``aggregate(…, 0.0D, …)``, nor a DuckDB ``list_prepend`` of a
+    double zero. The allowlist is exact: (module, function) -> number of
+    folds."""
     import ast
     import pathlib
     import re
 
     allowed = {
-        # dot products against literal ±1 SRP planes: a different concept
-        # from the two-column dot, with its own SQL-text twin (_dot_sql)
-        ("operators/knn.py", "_dot_lit"): 1,
+        # Spark SQL text of parity.dot against literal ±1 SRP planes: one
+        # string per plane bank costs one parser call instead of ~dim
+        # Py4J round-trips per plane
+        ("operators/knn.py", "_dot_sql"): 1,
         # the conditional sum_pos fold (Spark form + DuckDB twin): adds
         # max(x, 0), not a vector kernel
         ("queries/scalar_fns.py", "fn_array_higher_order"): 2,
     }
-    sql_fold = re.compile(
+    duck_fold = re.compile(
         r"list_prepend\(\s*(CAST\(\s*0\s+AS\s+DOUBLE\s*\)|0\.0\b)"
     )
+    spark_sql_fold = re.compile(
+        r"\baggregate\s*\(.*?,\s*(0(\.0*)?D|CAST\(\s*0(\.0*)?\s+AS\s+DOUBLE\s*\))"
+        r"\s*,",
+        re.DOTALL | re.IGNORECASE,
+    )
+
+    def is_double_zero(seed, names):
+        """``F.lit(0.0)``, ``F.lit(0).cast("double")`` and the like; a
+        name is resolved to what the module assigns it, and a name the
+        module never assigns (a parameter) counts as a hit."""
+        if isinstance(seed, ast.Name):
+            vals = names.get(seed.id)
+            return vals is None or any(is_double_zero(v, {}) for v in vals)
+        cast_double = (
+            isinstance(seed, ast.Call)
+            and isinstance(seed.func, ast.Attribute)
+            and seed.func.attr in ("cast", "astype")
+            and "double" in ast.unparse(seed.args).lower()
+        )
+        if cast_double:
+            seed = seed.func.value
+        return (
+            isinstance(seed, ast.Call)
+            and ast.unparse(seed.func) == "F.lit"
+            and len(seed.args) == 1
+            and isinstance(seed.args[0], ast.Constant)
+            and seed.args[0].value == 0
+            and (cast_double or isinstance(seed.args[0].value, float))
+        )
+
+    def str_text(node):
+        """A string constant's text, f-string fields as ``{}``."""
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        if isinstance(node, ast.JoinedStr):
+            return "".join(
+                v.value if isinstance(v, ast.Constant) else "{}"
+                for v in node.values
+            )
+        return None
+
     pkg = pathlib.Path(__file__).resolve().parent.parent / "pyetl_spark"
     pickles, found = [], {}
     for path in sorted(pkg.rglob("*.py")):
@@ -392,6 +436,14 @@ def test_fold_kernels_and_worker_shipping_have_one_home():
             n for n in ast.walk(tree)
             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
         ]
+        names, fstring_parts = {}, set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Assign):
+                for t in n.targets:
+                    if isinstance(t, ast.Name):
+                        names.setdefault(t.id, []).append(n.value)
+            if isinstance(n, ast.JoinedStr):
+                fstring_parts.update(id(v) for v in n.values)
 
         def owner(lineno, funcs=funcs):
             inner = [
@@ -408,11 +460,14 @@ def test_fold_kernels_and_worker_shipping_have_one_home():
                 and isinstance(n.func, ast.Attribute)
                 and n.func.attr == "aggregate"
                 and len(n.args) >= 2
-                and ast.unparse(n.args[1]) == "F.lit(0.0)"
+                and is_double_zero(n.args[1], names)
             ):
                 hits.append(n.lineno)
+            text = None if id(n) in fstring_parts else str_text(n)
+            if text is not None:
+                hits += [n.lineno] * len(spark_sql_fold.findall(text))
         hits += [
-            src.count("\n", 0, m.start()) + 1 for m in sql_fold.finditer(src)
+            src.count("\n", 0, m.start()) + 1 for m in duck_fold.finditer(src)
         ]
         for lineno in hits:
             key = (rel, owner(lineno))
